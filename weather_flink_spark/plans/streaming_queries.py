@@ -73,6 +73,8 @@ def _small_state(spark: SparkSession, n: int = 2):
     State-store partition count binds at stream START; 32 stores per
     micro-batch spend the whole batch on setup/commit for a 28-row
     fixture. Restored afterwards so batch queries keep full parallelism.
+    Composes with ``streaming.jobs.start_stream``'s per-core cap, which
+    only ever lowers the count (min(n, cores)).
     """
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))

@@ -9,6 +9,9 @@ Scale posture (100 TB target, tested on local[32]):
   moves data in columnar batches, never row-at-a-time pickling.
 - shuffle.partitions default sized for local runs; on a real cluster this
   is overridden by --conf (AQE coalesces down, so oversizing is safe).
+  Not for stateful streams: their state-store partition count is fixed
+  when the checkpoint is created and AQE never coalesces it, so
+  ``streaming.jobs.start_stream`` caps it at the local core count.
 """
 
 from __future__ import annotations
@@ -60,6 +63,10 @@ def get_spark(
     data-size-dependent is left to AQE.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # an explicit warehouse must not trigger the default's /tmp prune
+    warehouse = os.environ.get("SPARK_GRAFT_WAREHOUSE")
+    if warehouse is None:
+        warehouse = _default_warehouse()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -92,10 +99,7 @@ def get_spark(
         # repo — PID-scoped so concurrent verification processes (e.g.
         # an oracle sweep beside pytest) can't overwrite each other's
         # bucketed table files mid-read (r8 verdict task #4)
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", _default_warehouse()),
-        )
+        .config("spark.sql.warehouse.dir", warehouse)
         .config("spark.ui.enabled", "false")
         # Spark 4.1's checksum checkpoint manager can deadlock its async
         # checksum pool under many concurrent state partitions on local

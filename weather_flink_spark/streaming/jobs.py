@@ -13,6 +13,8 @@ jobs are that intended plan, expressed as Structured Streaming:
 - ``dedup_stream``        watermark-scoped exact dedup
 - ``presence_transitions``B3: arbitrary per-key state (online/offline)
                           via applyInPandasWithState, RocksDB-ready
+- ``start_stream``        start a writer with at most one state
+                          partition per local core
 - ``run_to_memory``       availableNow → memory-sink test harness
 
 Every operator works on both streaming and batch DataFrames (the batch
@@ -27,9 +29,10 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUT_OF_ORDER = "3.5 seconds"  # WeatherProcessingJob.java:66 (3.5f * 1000 ms)
@@ -121,9 +124,14 @@ def presence_transitions(df: DataFrame, gap_ms: int = 30_000) -> DataFrame:
     (last_seen millis, events in current session). This is the
     reference's "presence event" derivation (SURVEY.md §2-B B3) as
     ``applyInPandasWithState`` — per-key state store, RocksDB-backed at
-    scale. Event-time (not processing-time) timeouts keep the operator
-    deterministic under replay: liveness is judged by the watermark, so
-    a backfill run and a live run emit identical transitions.
+    scale. Event-time (not processing-time) timeouts make the output
+    independent of wall-clock speed, but not of where micro-batch
+    boundaries fall: the watermark advances only between batches
+    (dropping rows behind it and firing timeouts), and ``fn`` orders a
+    device's events only within one batch. The same input cut into
+    different batches (a backfill in one batch, a live feed, a stop and
+    resume) can emit different transitions; only runs with the same
+    batch boundaries are guaranteed to agree.
     """
 
     def fn(
@@ -267,8 +275,37 @@ def rate_limit_stream(
 
 
 # ---------------------------------------------------------------------------
-# test harness: run a streaming query to a memory sink and read it back
+# starting a query; test harness: run to a memory sink and read it back
 # ---------------------------------------------------------------------------
+
+
+def start_stream(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` with at most one state partition per local core.
+
+    Each stateful operator keeps one state-store partition per shuffle
+    partition. The count is fixed when the checkpoint is created and
+    AQE never coalesces it, so the session's batch-sized
+    ``spark.sql.shuffle.partitions`` would become that many Python
+    state tasks per micro-batch, nearly all of it per-task overhead.
+    On a ``local[...]`` master the conf is lowered to
+    ``min(current, defaultParallelism)`` for the ``start()`` call only:
+    the query clones the session conf while ``start()`` builds it, so
+    restoring the session value afterwards is safe. A resumed
+    checkpoint keeps its own count (Spark restores it from the offset
+    log). Any other master starts plainly: executors may not have
+    registered yet, and the count would stay fixed for the
+    checkpoint's life.
+    """
+    sc = spark.sparkContext
+    if not (sc.master == "local" or sc.master.startswith("local[")):
+        return writer.start()
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(min(int(before), sc.defaultParallelism)))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, before)
 
 
 def run_to_memory(
@@ -289,12 +326,13 @@ def run_to_memory(
     the bounded-state tests assert on.
     """
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    q = (
+    spark = result.sparkSession
+    q = start_stream(
+        spark,
         result.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     deadline = time.time() + timeout_s
     while q.isActive and time.time() < deadline:
@@ -308,7 +346,6 @@ def run_to_memory(
         raise TimeoutError("streaming query did not finish in time")
     if progress_sink is not None:
         progress_sink.extend(q.recentProgress)
-    spark = result.sparkSession
     return spark.table(name)
 
 

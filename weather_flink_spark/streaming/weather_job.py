@@ -32,7 +32,7 @@ from weather_flink_spark.sources.framed import (
     decode_framed_json,
     to_presence_kafka_records,
 )
-from weather_flink_spark.streaming.jobs import presence_transitions, with_event_time
+from weather_flink_spark.streaming.jobs import presence_transitions, start_stream, with_event_time
 
 
 @dataclass(frozen=True)
@@ -128,4 +128,4 @@ def run(spark: SparkSession, conf: JobConfig, registry: SchemaRegistry | None = 
     writer = build_sink(result, conf)
     if conf.get("trigger", "availableNow") == "availableNow":
         writer = writer.trigger(availableNow=True)
-    return writer.outputMode("append").start()
+    return start_stream(spark, writer.outputMode("append"))
