@@ -7,10 +7,9 @@ import os
 import shutil
 import tempfile
 
-from weather_flink_spark.plans.streaming_queries import _configure, _small_state
 from weather_flink_spark.sources.framed import decode_framed_json
 from weather_flink_spark.streaming import fixtures as fx
-from weather_flink_spark.streaming.jobs import tumbling_counts, with_event_time
+from weather_flink_spark.streaming.jobs import run_bounded, tumbling_counts, with_event_time
 from weather_flink_spark.streaming.kafka_transactional import (
     SpoolDirProducer,
     TransactionalKafkaSink,
@@ -80,7 +79,6 @@ def test_failed_partition_aborts_transaction(spark):
 def test_exactly_once_under_checkpoint_replay(spark):
     """End-to-end twin of test_exactly_once.py: wipe the checkpoint so
     every micro-batch redelivers; the spool must not change."""
-    _configure(spark)
     base = os.path.join(tempfile.gettempdir(), "wfs_ktx_e2e")
     shutil.rmtree(base, ignore_errors=True)
     src = fx.write_value_files(spark, os.path.join(base, "src"), fx.json_framed_values(), 2)
@@ -90,22 +88,16 @@ def test_exactly_once_under_checkpoint_replay(spark):
     def run():
         raw = fx.read_value_stream(spark, src)
         agg = tumbling_counts(with_event_time(decode_framed_json(raw, known_magics=(0, 1))))
-        q = (
-            write_exactly_once_kafka(
-                agg, "WeatherPresenceEvent", _factory_for(spool), _row_kv, log, ckpt
-            )
-            .trigger(availableNow=True)
-            .start()
+        writer = write_exactly_once_kafka(
+            agg, "WeatherPresenceEvent", _factory_for(spool), _row_kv, log, ckpt
         )
-        q.awaitTermination(120)
+        run_bounded(spark, writer, max_partitions=2)
 
-    with _small_state(spark):
-        run()
+    run()
     first = sorted(map(str, SpoolDirProducer.committed_records(spool)))
     assert first
 
     shutil.rmtree(ckpt)  # force full redelivery
-    with _small_state(spark):
-        run()
+    run()
     second = sorted(map(str, SpoolDirProducer.committed_records(spool)))
     assert second == first

@@ -107,10 +107,9 @@ def test_run_caps_state_partitions_at_local_cores(spark):
 def _presence_two_legs(spark, base: str, n: int, resume) -> tuple[list, set[int]]:
     """A parquet-sink presence query over one file, stopped, then resumed
     from the same checkpoint after a second file lands in the source
-    dir. Leg 1 starts plainly at ``n`` partitions; ``resume`` starts
-    leg 2. Returns the sink rows and the partition counts leg 2
-    reported."""
-    from weather_flink_spark.plans.streaming_queries import _small_state
+    dir. Leg 1 starts plainly at ``n`` partitions, above the cap
+    start_stream would apply; ``resume`` starts leg 2. Returns the sink
+    rows and the partition counts leg 2 reported."""
     from weather_flink_spark.sources.framed import decode_framed_json
     from weather_flink_spark.streaming.jobs import presence_transitions, with_event_time
 
@@ -128,8 +127,13 @@ def _presence_two_legs(spark, base: str, n: int, resume) -> tuple[list, set[int]
             .trigger(availableNow=True)
         )
 
-    with _small_state(spark, n):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
         assert writer().start().awaitTermination(120)
+    finally:
+        spark.conf.set(key, before)
     fx.append_value_file(src, values[1::2], "part-00001.parquet")
     q = resume(writer())
     assert q.awaitTermination(120)

@@ -801,10 +801,8 @@ def s_stream_ann_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weather_flink_spark.plans.analytics_wave4 import (
         kmeans_final_assignment,
     )
-    from weather_flink_spark.plans.streaming_queries import _configure
     from weather_flink_spark.streaming.jobs import run_to_memory
 
-    _configure(spark)
     cent, _ = kmeans_final_assignment(spark, sf_dir)
     model = sorted(
         ((r["cid"], list(r["c"])) for r in cent.collect()),
@@ -866,10 +864,8 @@ def s_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_hash_col,
         tokens_col,
     )
-    from weather_flink_spark.plans.streaming_queries import _configure
     from weather_flink_spark.streaming.jobs import run_to_memory
 
-    _configure(spark)
     static_bands = minhash_bands(spark, sf_dir).select(
         F.col("doc_id").alias("corpus_doc"),
         F.col("band_id").alias("s_band_id"),

@@ -31,7 +31,6 @@ import json
 import os
 import shutil
 import tempfile
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -191,9 +190,8 @@ def run_curation_stream(
 
     ``on_batch(batch_id, verdict_dir)`` (tests only) observes the sink
     after each batch commits."""
-    from weather_flink_spark.plans.streaming_queries import _configure
+    from weather_flink_spark.streaming.jobs import run_bounded
 
-    _configure(spark)
     fixture, h = _stream_fixture(spark, sf_dir, n_files)
     hist_bands, hist_sh = _history_tables(spark, sf_dir, h)
     hist_bands = hist_bands.persist()
@@ -224,23 +222,10 @@ def run_curation_stream(
         .option("maxFilesPerTrigger", 1)
         .json(fixture)
     )
-    q = (
-        stream.writeStream.foreachBatch(verdict_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        spark,
+        stream.writeStream.foreachBatch(verdict_batch).option("checkpointLocation", ckpt),
     )
-    deadline = time.time() + 120
-    while q.isActive and time.time() < deadline:
-        q.awaitTermination(0.02)
-    if q.isActive:
-        # Never fall through to a partial verdict table: stop the query
-        # and fail loudly rather than read an incomplete sink.
-        q.stop()
-        raise TimeoutError(
-            "curation stream still active after 120s deadline; "
-            "refusing to read a partial verdict table"
-        )
 
     result = spark.read.parquet(os.path.join(verdict_dir, "batch-*"))
     out = result.select(

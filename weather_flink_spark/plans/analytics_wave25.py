@@ -565,15 +565,13 @@ def run_ann_search_stream(
     import os
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as papq
 
     from weather_flink_spark.plans.analytics_wave4 import kmeans_final_assignment
     from weather_flink_spark.plans.llm_extra import IVF_N_QUERIES, ivf_assigned_table
-    from weather_flink_spark.plans.streaming_queries import _configure
+    from weather_flink_spark.streaming.jobs import run_bounded
 
-    _configure(spark)
     assigned = ivf_assigned_table(spark, sf_dir)
     cent, _ = kmeans_final_assignment(spark, sf_dir)
     # bounded collect: the trained model is k=8 rows by construction
@@ -613,18 +611,10 @@ def run_ann_search_stream(
         .option("maxFilesPerTrigger", 1)
         .json(d)
     )
-    q = (
-        stream.writeStream.foreachBatch(answer_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        spark,
+        stream.writeStream.foreachBatch(answer_batch).option("checkpointLocation", ckpt),
     )
-    deadline = time.time() + 120
-    while q.isActive and time.time() < deadline:
-        q.awaitTermination(0.02)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("ANN search stream still active after 120s deadline")
 
     out = spark.createDataFrame(
         acc, schema="query_id bigint, vec_id bigint, cell bigint, cosine double, k_rank int"

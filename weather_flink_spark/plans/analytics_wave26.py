@@ -1220,15 +1220,13 @@ def run_hnsw_insert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as papq
 
     from weather_flink_spark.plans.analytics_wave4 import kmeans_final_assignment
     from weather_flink_spark.plans.llm_extra import ivf_assigned_table
-    from weather_flink_spark.plans.streaming_queries import _configure
+    from weather_flink_spark.streaming.jobs import run_bounded
 
-    _configure(spark)
     assigned = ivf_assigned_table(spark, sf_dir)
     cent, _ = kmeans_final_assignment(spark, sf_dir)
     # bounded collect: the trained model is k=8 rows by construction
@@ -1271,18 +1269,10 @@ def run_hnsw_insert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .json(d)
     )
-    q = (
-        stream.writeStream.foreachBatch(insert_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        spark,
+        stream.writeStream.foreachBatch(insert_batch).option("checkpointLocation", ckpt),
     )
-    deadline = time.time() + 120
-    while q.isActive and time.time() < deadline:
-        q.awaitTermination(0.02)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("HNSW insert stream still active after 120s deadline")
 
     out = spark.createDataFrame(
         acc,

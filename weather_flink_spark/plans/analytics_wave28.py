@@ -341,10 +341,8 @@ def s_stream_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from weather_flink_spark.plans.analytics_wave20 import _write_jsonl_fixture
     from weather_flink_spark.plans.analytics_wave27 import _DSIR_B
-    from weather_flink_spark.plans.streaming_queries import _configure
     from weather_flink_spark.streaming.jobs import run_to_memory
 
-    _configure(spark)
     arr = dsir_lr_scaled_array(spark, sf_dir)
 
     t = papq.read_table(sf_dir + "/documents.parquet", columns=["doc_id", "text"])

@@ -227,10 +227,8 @@ def _kalman_stream_run(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from weather_flink_spark.plans.analytics_wave28 import _KAL_Q, _KAL_R
-    from weather_flink_spark.plans.streaming_queries import _configure
     from weather_flink_spark.streaming.jobs import run_to_memory
 
-    _configure(spark)
 
     # fixture: first 200 events of the 8 lowest user_ids, split into two
     # time-ordered files so state must carry across micro-batches

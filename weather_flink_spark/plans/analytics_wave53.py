@@ -288,9 +288,8 @@ def run_cdc_upsert_stream(
 
     import pyarrow.parquet as papq
 
-    from weather_flink_spark.plans.streaming_queries import _configure
+    from weather_flink_spark.streaming.jobs import run_bounded
 
-    _configure(spark)
     t = papq.read_table(
         sf_dir + "/events.parquet",
         columns=["user_id", "event_id", "ts", "event_type", "value"],
@@ -370,13 +369,12 @@ def run_cdc_upsert_stream(
         .option("maxFilesPerTrigger", 1)
         .json(d)
     )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(d, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        spark,
+        stream.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", os.path.join(d, "_ckpt")
+        ),
     )
-    q.awaitTermination(120)
     final = spark.read.parquet(snap_dir).transform(snapshot())
     handles = {
         "dir": d,

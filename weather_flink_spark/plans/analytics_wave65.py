@@ -111,10 +111,8 @@ def s_stream_conformal_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from weather_flink_spark.plans.streaming_queries import _configure
     from weather_flink_spark.streaming.jobs import run_to_memory
 
-    _configure(spark)
     slope, intercept, q_hat = conformal_model(spark, sf_dir)
     rows = stream_fixture_rows(sf_dir)
     d = os.path.join(

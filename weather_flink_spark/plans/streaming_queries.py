@@ -4,17 +4,22 @@ Each entry builds a real Structured Streaming pipeline: a file source
 carrying the reference's Kafka wire shape (``value: binary``, framed
 Avro/JSON — WeatherKafkaAvroDeserializerSchema.java:41-67), event-time
 transforms with the declared 3.5 s watermark
-(WeatherProcessingJob.java:66), availableNow execution into a memory
-sink, and returns the sink contents as the result DataFrame. No DuckDB
-oracle — window/watermark semantics are instead pinned by the
-oracle-checked batch twins (q_tumbling_batch / q_sliding_batch /
-q_session_batch in events_queries.py) and by tests/test_streaming.py.
+(WeatherProcessingJob.java:66), and a sink, then returns what the sink
+holds as the result DataFrame. No DuckDB oracle — window/watermark
+semantics are instead pinned by the oracle-checked batch twins
+(q_tumbling_batch / q_sliding_batch / q_session_batch in
+events_queries.py) and by tests/test_streaming.py.
 
-Determinism: fixtures are fixed byte sequences; single-batch execution
-(availableNow, no maxFilesPerTrigger) makes watermark progression
-deterministic. ``s_late_data`` alone uses two ordered files
-(mtime-ranked, maxFilesPerTrigger=1) so the watermark provably advances
-between batches and drops the late straggler.
+Lifecycle: every entry runs through ``streaming.jobs`` —
+``run_to_memory`` or ``run_bounded`` (availableNow, one bounded wait,
+``TimeoutError`` instead of a partial sink), or ``start_stream`` for
+the unbounded rate source — with ``max_partitions=_FIXTURE_PARTITIONS``.
+
+Determinism: fixtures are fixed byte sequences, and
+``fixtures.read_value_stream`` takes one file per micro-batch in mtime
+order, so batch boundaries (and with them watermark progression) are
+fixed. ``s_late_data`` and ``s_dedup_within_watermark`` add files with
+pinned mtimes so the watermark provably advances between batches.
 """
 
 from __future__ import annotations
@@ -24,7 +29,6 @@ import shutil
 import tempfile
 import time
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,52 +40,21 @@ from weather_flink_spark.streaming.jobs import (
     dedup_stream,
     presence_transitions,
     rate_limit_stream,
+    run_bounded,
     run_to_memory,
     session_windows,
+    start_stream,
     sliding_counts,
     tumbling_counts,
     with_event_time,
 )
 
 
-def _configure(spark: SparkSession) -> SparkSession:
-    """Runtime confs the streaming entries need even on a foreign session.
-
-    The driver runs queries() on its own SparkSession, so session-factory
-    defaults don't reach it; these are runtime-settable SQL confs.
-    """
-    try:
-        # Spark 4.1 checksum checkpoint manager deadlocks its async pool
-        # under many concurrent state partitions on local filesystems.
-        spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-        # 4.1's commit validation rejects batches whose state stores
-        # never commit — exactly what an idempotent foreachBatch skip
-        # does on replay (streaming/exactly_once.py).
-        spark.conf.set("spark.sql.streaming.stateStore.commitValidation.enabled", "false")
-    except Exception:
-        pass
-    return spark
-
-
-@contextmanager
-def _small_state(spark: SparkSession, n: int = 2):
-    """Temporarily shrink shuffle/state partitions for tiny fixtures.
-
-    n=2 keeps multi-partition state coverage while halving store
-    setup/commit vs the earlier n=4 (measured ~0.5 s per entry on the
-    fixture suite); partition count is physical, not semantic.
-    State-store partition count binds at stream START; 32 stores per
-    micro-batch spend the whole batch on setup/commit for a 28-row
-    fixture. Restored afterwards so batch queries keep full parallelism.
-    Composes with ``streaming.jobs.start_stream``'s per-core cap, which
-    only ever lowers the count (min(n, cores)).
-    """
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+# Two state partitions keep multi-partition state coverage while a
+# 28-row fixture spends little of each micro-batch on store setup and
+# commit (measured ~0.5 s per entry against four); the count is
+# physical, not semantic.
+_FIXTURE_PARTITIONS = 2
 
 
 def _fixture_dir(spark: SparkSession, kind: str) -> str:
@@ -95,13 +68,11 @@ def _fixture_dir(spark: SparkSession, kind: str) -> str:
 
 
 def _avro_stream(spark: SparkSession) -> DataFrame:
-    _configure(spark)
     raw = fx.read_value_stream(spark, _fixture_dir(spark, "avro"))
     return with_event_time(decode_framed_avro(raw, fx.REGISTRY))
 
 
 def _json_stream(spark: SparkSession, kind: str = "json") -> DataFrame:
-    _configure(spark)
     raw = fx.read_value_stream(spark, _fixture_dir(spark, kind))
     return with_event_time(decode_framed_json(raw, known_magics=(0, 1)))
 
@@ -116,8 +87,11 @@ def _json_stream(spark: SparkSession, kind: str = "json") -> DataFrame:
     tags=("streaming",),
 )
 def s_watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _small_state(spark):
-        return run_to_memory(tumbling_counts(_avro_stream(spark)), output_mode="update")
+    return run_to_memory(
+        tumbling_counts(_avro_stream(spark)),
+        output_mode="update",
+        max_partitions=_FIXTURE_PARTITIONS,
+    )
 
 
 @register(
@@ -126,8 +100,11 @@ def s_watermark_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def s_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _small_state(spark):
-        return run_to_memory(sliding_counts(_json_stream(spark)), output_mode="update")
+    return run_to_memory(
+        sliding_counts(_json_stream(spark)),
+        output_mode="update",
+        max_partitions=_FIXTURE_PARTITIONS,
+    )
 
 
 @register(
@@ -141,8 +118,11 @@ def s_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def s_session_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _small_state(spark):
-        return run_to_memory(session_windows(_avro_stream(spark)), output_mode="append")
+    return run_to_memory(
+        session_windows(_avro_stream(spark)),
+        output_mode="append",
+        max_partitions=_FIXTURE_PARTITIONS,
+    )
 
 
 @register(
@@ -154,8 +134,11 @@ def s_session_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def s_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _small_state(spark):
-        return run_to_memory(dedup_stream(_json_stream(spark, "dup")), output_mode="append")
+    return run_to_memory(
+        dedup_stream(_json_stream(spark, "dup")),
+        output_mode="append",
+        max_partitions=_FIXTURE_PARTITIONS,
+    )
 
 
 @register(
@@ -167,8 +150,11 @@ def s_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def s_stateful_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _small_state(spark):
-        return run_to_memory(presence_transitions(_avro_stream(spark)), output_mode="append")
+    return run_to_memory(
+        presence_transitions(_avro_stream(spark)),
+        output_mode="append",
+        max_partitions=_FIXTURE_PARTITIONS,
+    )
 
 
 @register(
@@ -189,12 +175,12 @@ def s_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rate_limit_run(
     spark: SparkSession, progress_sink: list | None = None
 ) -> DataFrame:
-    with _small_state(spark):
-        return run_to_memory(
-            rate_limit_stream(_json_stream(spark)),
-            output_mode="append",
-            progress_sink=progress_sink,
-        )
+    return run_to_memory(
+        rate_limit_stream(_json_stream(spark)),
+        output_mode="append",
+        progress_sink=progress_sink,
+        max_partitions=_FIXTURE_PARTITIONS,
+    )
 
 
 @register(
@@ -207,12 +193,6 @@ def _rate_limit_run(
     tags=("streaming",),
 )
 def s_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _configure(spark)
-    with _small_state(spark):
-        return _late_data_run(spark)
-
-
-def _late_data_run(spark: SparkSession) -> DataFrame:
     d = os.path.join(tempfile.gettempdir(), f"wfs_stream_late_{os.getpid()}")
     values = fx.json_framed_values()
     late = values[-4:-3]  # the dev-0 straggler is the last good record
@@ -235,24 +215,17 @@ def _late_data_run(spark: SparkSession) -> DataFrame:
     agg = tumbling_counts(
         with_event_time(decode_framed_json(raw, known_magics=(0, 1))), width="10 seconds"
     )
-    name = f"mem_{uuid.uuid4().hex[:12]}"
     # append mode: late input is dropped once its window is below the
     # watermark (update mode would instead re-create the evicted window)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    progress: list = []
+    windows = run_to_memory(
+        agg, output_mode="append", progress_sink=progress, max_partitions=_FIXTURE_PARTITIONS
     )
-    deadline = time.time() + 120
-    while q.isActive and time.time() < deadline:
-        q.awaitTermination(1)
     dropped = 0
-    for p in q.recentProgress:
+    for p in progress:
         for op in p.get("stateOperators", []):
             dropped += op.get("numRowsDroppedByWatermark", 0)
-    n_windows = spark.table(name).count()
+    n_windows = windows.count()
     return spark.createDataFrame(
         [(int(n_windows), int(dropped))], "n_window_updates long, n_dropped_late long"
     )
@@ -279,8 +252,7 @@ def s_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("site")
         .agg(F.count("*").alias("n_events"))
     )
-    with _small_state(spark):
-        return run_to_memory(enriched, output_mode="complete")
+    return run_to_memory(enriched, output_mode="complete", max_partitions=_FIXTURE_PARTITIONS)
 
 
 @register(
@@ -312,8 +284,7 @@ def s_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("t_b") <= F.col("t_a") + F.expr("interval 2 seconds")),
         "inner",
     ).select("dev", "t_a", "t_b")
-    with _small_state(spark):
-        return run_to_memory(joined, output_mode="append")
+    return run_to_memory(joined, output_mode="append", max_partitions=_FIXTURE_PARTITIONS)
 
 
 @register(
@@ -329,24 +300,19 @@ def s_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink"),
 )
 def s_file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _configure(spark)
     out = os.path.join(tempfile.gettempdir(), f"wfs_stream_fsink_{os.getpid()}")
     ckpt = out + "_ckpt"
     shutil.rmtree(out, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-    with _small_state(spark):
-        stream = _json_stream(spark).select("deviceId", "event_time", "temperature")
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        deadline = time.time() + 120
-        while q.isActive and time.time() < deadline:
-            q.awaitTermination(1)
+    stream = _json_stream(spark).select("deviceId", "event_time", "temperature")
+    run_bounded(
+        spark,
+        stream.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append"),
+        max_partitions=_FIXTURE_PARTITIONS,
+    )
     back = spark.read.parquet(out)  # batch read honors the sink manifest
     return back.groupBy("deviceId").agg(
         F.count("*").alias("n_events"),
@@ -365,34 +331,31 @@ def s_file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "source"),
 )
 def s_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _configure(spark)
-    with _small_state(spark):
-        stream = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "50")
-            .option("numPartitions", "2")
-            .load()
-            .withWatermark("timestamp", "1 second")
-            .groupBy(F.window("timestamp", "1 second").alias("w"))
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("window_start"), "n")
-        )
-        name = f"mem_{uuid.uuid4().hex[:12]}"
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        deadline = time.time() + 30
-        # rate source is unbounded: stop once at least one full window landed
-        while time.time() < deadline:
-            q.processAllAvailable()
-            if spark.table(name).count() >= 2:
-                break
-            time.sleep(0.3)
-        q.stop()
-        rows = spark.table(name).collect()
+    stream = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", "50")
+        .option("numPartitions", "2")
+        .load()
+        .withWatermark("timestamp", "1 second")
+        .groupBy(F.window("timestamp", "1 second").alias("w"))
+        .agg(F.count("*").alias("n"))
+        .select(F.col("w.start").alias("window_start"), "n")
+    )
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    q = start_stream(
+        spark,
+        stream.writeStream.format("memory").queryName(name).outputMode("complete"),
+        max_partitions=_FIXTURE_PARTITIONS,
+    )
+    deadline = time.time() + 30
+    # rate source is unbounded: stop once at least one full window landed
+    while time.time() < deadline:
+        q.processAllAvailable()
+        if spark.table(name).count() >= 2:
+            break
+        time.sleep(0.3)
+    q.stop()
+    rows = spark.table(name).collect()
     # wall-clock governs how many windows land, so reduce to invariants
     # that ARE deterministic (the determinism suite reruns every entry)
     saw_windows = len(rows) >= 2
@@ -422,7 +385,6 @@ def s_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink", "incremental"),
 )
 def s_foreachbatch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _configure(spark)
     fixture = _fixture_dir(spark, "json")
     base = os.path.join(tempfile.gettempdir(), f"wfs_stream_rollup_{os.getpid()}")
     rollup_dir = os.path.join(base, "rollup")
@@ -445,23 +407,19 @@ def s_foreachbatch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(rollup_dir, ignore_errors=True)
         os.replace(tmp, rollup_dir)
 
-    with _small_state(spark):
-        raw = fx.read_value_stream(spark, fixture)
-        decoded = with_event_time(decode_framed_json(raw, known_magics=(0, 1)))
-        agg = decoded.groupBy("deviceId").agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("temperature").cast("decimal(18,6)")).cast("double").alias("sum_temp"),
-        )
-        q = (
-            agg.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        deadline = time.time() + 120
-        while q.isActive and time.time() < deadline:
-            q.awaitTermination(1)
+    raw = fx.read_value_stream(spark, fixture)
+    decoded = with_event_time(decode_framed_json(raw, known_magics=(0, 1)))
+    agg = decoded.groupBy("deviceId").agg(
+        F.count("*").alias("n_events"),
+        F.sum(F.col("temperature").cast("decimal(18,6)")).cast("double").alias("sum_temp"),
+    )
+    run_bounded(
+        spark,
+        agg.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", ckpt)
+        .outputMode("update"),
+        max_partitions=_FIXTURE_PARTITIONS,
+    )
 
     from pyspark.sql import types as T
 
@@ -517,42 +475,41 @@ def _ddww_run(
 ) -> DataFrame:
     from weather_flink_spark.streaming.jobs import dedup_stream_within_watermark
 
-    _configure(spark)
-    with _small_state(spark):
-        d = os.path.join(tempfile.gettempdir(), f"wfs_stream_ddww_{os.getpid()}")
-        values = fx.json_framed_values()
-        # good records only; split by burst (timestamp offset < 30 s)
-        import json as _json
+    d = os.path.join(tempfile.gettempdir(), f"wfs_stream_ddww_{os.getpid()}")
+    values = fx.json_framed_values()
+    # good records only; split by burst (timestamp offset < 30 s)
+    import json as _json
 
-        def ts_of(v: bytes) -> int:
-            return _json.loads(v[1:])["timestamp"]
+    def ts_of(v: bytes) -> int:
+        return _json.loads(v[1:])["timestamp"]
 
-        good = [v for v in values if v[0:1] in (b"\x00", b"\x01")]
-        good = [v for v in good if b"timestamp" in v and b"deviceId" in v]
-        burst1 = [v for v in good if ts_of(v) < fx.BASE_MS + 30_000]
-        burst2 = [v for v in good if ts_of(v) >= fx.BASE_MS + 30_000]
-        fx.write_value_files(spark, d, burst1 * 2, n_files=1)
-        # two advancing batches: the watermark computed from batch 2 is
-        # APPLIED to state eviction one batch later (the same lag
-        # s_late_data documents), so batch 3 re-advances and batch 4's
-        # burst 2 sees burst-1 state already evicted (expiry base+6.5 s
-        # < applied watermark base+11.5 s) while staying on time
-        # (burst-2 times base+60 s > watermark)
-        future = [
-            fx.frame(1, b'{"deviceId": "dev-9", "timestamp": %d}' % (fx.BASE_MS + 15_000))
-        ]
-        future2 = [
-            fx.frame(1, b'{"deviceId": "dev-8", "timestamp": %d}' % (fx.BASE_MS + 16_000))
-        ]
-        now = time.time()
-        for i, batch in enumerate((future, future2, burst2 * 2), start=1):
-            p = fx.append_value_file(d, batch, f"ddww-batch-{i}.parquet")
-            os.utime(p, (now + 60 * i, now + 60 * i))
-        raw = fx.read_value_stream(spark, d)  # maxFilesPerTrigger=1 → ordered
-        return run_to_memory(
-            dedup_stream_within_watermark(
-                with_event_time(decode_framed_json(raw, known_magics=(0, 1)))
-            ),
-            output_mode="append",
-            progress_sink=progress_sink,
-        )
+    good = [v for v in values if v[0:1] in (b"\x00", b"\x01")]
+    good = [v for v in good if b"timestamp" in v and b"deviceId" in v]
+    burst1 = [v for v in good if ts_of(v) < fx.BASE_MS + 30_000]
+    burst2 = [v for v in good if ts_of(v) >= fx.BASE_MS + 30_000]
+    fx.write_value_files(spark, d, burst1 * 2, n_files=1)
+    # two advancing batches: the watermark computed from batch 2 is
+    # APPLIED to state eviction one batch later (the same lag
+    # s_late_data documents), so batch 3 re-advances and batch 4's
+    # burst 2 sees burst-1 state already evicted (expiry base+6.5 s
+    # < applied watermark base+11.5 s) while staying on time
+    # (burst-2 times base+60 s > watermark)
+    future = [
+        fx.frame(1, b'{"deviceId": "dev-9", "timestamp": %d}' % (fx.BASE_MS + 15_000))
+    ]
+    future2 = [
+        fx.frame(1, b'{"deviceId": "dev-8", "timestamp": %d}' % (fx.BASE_MS + 16_000))
+    ]
+    now = time.time()
+    for i, batch in enumerate((future, future2, burst2 * 2), start=1):
+        p = fx.append_value_file(d, batch, f"ddww-batch-{i}.parquet")
+        os.utime(p, (now + 60 * i, now + 60 * i))
+    raw = fx.read_value_stream(spark, d)  # maxFilesPerTrigger=1 → ordered
+    return run_to_memory(
+        dedup_stream_within_watermark(
+            with_event_time(decode_framed_json(raw, known_magics=(0, 1)))
+        ),
+        output_mode="append",
+        progress_sink=progress_sink,
+        max_partitions=_FIXTURE_PARTITIONS,
+    )

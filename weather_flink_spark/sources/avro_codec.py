@@ -13,10 +13,10 @@ reference's wire format needs (SURVEY.md §1.1/§1.3 — flat
   reader skipped — mirroring Avro's resolving decoder used at
   WeatherKafkaAvroDeserializerSchema.java:53.
 
-The environment has no spark-avro JAR and no Avro wheel, so this codec
-backs the framed-Kafka source tests; on a real cluster the expression
-path swaps to ``pyspark.sql.avro.functions.from_avro`` (gated in
-sources/framed.py) and this file remains the test oracle.
+The job depends on neither a spark-avro JAR nor an Avro wheel: this
+codec is the Avro decode of the framed-Kafka source
+(``sources/framed.decode_framed_avro``) on every deployment, and the
+encoder writes the test fixtures.
 """
 
 from __future__ import annotations

@@ -16,11 +16,8 @@ Two decode paths:
    the 100 TB hot path: no Python, whole-stage codegen, PERMISSIVE
    null-on-corrupt = drop-on-error.
 2. ``decode_framed_avro`` — Arrow-batched ``mapInPandas`` over the
-   pure-Python Avro codec (sources/avro_codec.py), used because the
-   environment has no spark-avro JAR. On a cluster with spark-avro
-   loaded, the same dispatch structure swaps the codec call for
-   ``from_avro(substring(value, 2, ...), schema_json)`` per magic byte
-   (gated on AVRO_EXPR_AVAILABLE below).
+   pure-Python Avro codec (sources/avro_codec.py). It is the only Avro
+   path: the job needs no spark-avro JAR on any deployment.
 
 Works identically on batch and streaming DataFrames — both paths are
 stateless row transforms.
@@ -38,28 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from weather_flink_spark.sources.avro_codec import RecordSchema, decode_record, encode_record
-
-try:  # the Python wrapper ships with pyspark; the JVM side may not
-    from pyspark.sql.avro.functions import from_avro  # noqa: F401
-
-    AVRO_EXPR_AVAILABLE = True  # python-side only — see avro_expr_available()
-except Exception:  # pragma: no cover
-    AVRO_EXPR_AVAILABLE = False
-
-
-def avro_expr_available(spark) -> bool:
-    """True iff the spark-avro JAR is actually on the JVM classpath.
-
-    Importing ``pyspark.sql.avro.functions`` succeeds even without the
-    JAR (the wrapper is pure Python), so the only reliable probe is
-    loading the JVM class that ``from_avro`` plans to."""
-    if not AVRO_EXPR_AVAILABLE:
-        return False
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.spark.sql.avro.AvroDataToCatalyst")
-        return True
-    except Exception:
-        return False
 
 # The reader schema of the reference's WeatherData record (provable
 # fields per FIXTURES.md §1.1 + synthetic extras for evolution tests).
@@ -187,62 +162,6 @@ def decode_framed_avro(
             yield pd.DataFrame(rows, columns=field_names)
 
     return df.mapInPandas(decode, schema=out_schema)
-
-
-def decode_framed_avro_expr(
-    df: DataFrame,
-    registry: SchemaRegistry,
-    reader_schema: dict | None = None,
-    value_col: str = "value",
-) -> DataFrame:
-    """Expression-level framed-Avro decode — the JVM fast path that runs
-    when the spark-avro JAR is on the classpath (gated on
-    AVRO_EXPR_AVAILABLE; :func:`decode_framed_avro` is the jar-free
-    Arrow-batched twin used in this sandbox).
-
-    Per registered magic byte: filter that frame's rows, strip the magic,
-    ``from_avro`` the body with that WRITER's schema (PERMISSIVE → corrupt
-    bodies yield a null struct, the poison-pill drop of
-    WeatherKafkaAvroDeserializerSchema.java:65-67), project onto the
-    READER's fields (writer-missing fields take the reader default —
-    Avro schema resolution), and union the branches. Registry misses and
-    schema-name mismatches never enter a branch, mirroring :47-50.
-    """
-    if not avro_expr_available(df.sparkSession):
-        raise RuntimeError(
-            "spark-avro JAR not on the classpath; use decode_framed_avro instead"
-        )
-    reader_raw = reader_schema or WEATHER_READER_SCHEMA
-    out_schema = WEATHER_SPARK_SCHEMA if reader_schema is None else _to_spark_schema(reader_raw)
-    reader_fields = {f["name"]: f for f in reader_raw["fields"]}
-
-    magic = F.expr(f"cast(conv(hex(substring({value_col}, 1, 1)), 16, 10) as int)")
-    body = F.expr(f"substring({value_col}, 2, 2147483647)")
-
-    branches = []
-    for m, writer_raw in sorted(registry.schemas.items()):
-        if writer_raw.get("name") != reader_raw.get("name"):
-            continue  # schema-name guard
-        writer_field_names = {f["name"] for f in writer_raw["fields"]}
-        parsed = df.filter(magic == m).select(
-            from_avro(body, json.dumps(writer_raw), {"mode": "PERMISSIVE"}).alias("_r")
-        )
-        cols = []
-        for name, fdef in reader_fields.items():
-            if name in writer_field_names:
-                cols.append(F.col(f"_r.{name}").alias(name))
-            else:  # reader-only field → Avro default
-                cols.append(F.lit(fdef.get("default")).alias(name))
-        branches.append(parsed.select(*cols))
-
-    if not branches:
-        return df.sparkSession.createDataFrame([], out_schema)
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    # PERMISSIVE null-structs and frames missing required keys drop here,
-    # matching decode_framed_avro's decode_record failure path
-    return out.filter(F.col("deviceId").isNotNull() & F.col("timestamp").isNotNull())
 
 
 def _to_spark_schema(avro_schema: dict) -> T.StructType:

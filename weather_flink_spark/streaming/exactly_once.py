@@ -26,14 +26,11 @@ import os
 from pyspark.sql import DataFrame
 
 
-class IdempotentParquetSink:
-    """foreachBatch target writing each micro-batch exactly once."""
+class CommittedBatchLog:
+    """The committed-batch log both exactly-once sinks gate on: a JSON
+    list of batch ids at ``self.commit_log``, replaced atomically."""
 
-    def __init__(self, out_dir: str) -> None:
-        self.out_dir = out_dir
-        self.data_dir = os.path.join(out_dir, "data")
-        self.commit_log = os.path.join(out_dir, "_committed_batches.json")
-        os.makedirs(self.data_dir, exist_ok=True)
+    commit_log: str
 
     def committed(self) -> set[int]:
         if not os.path.exists(self.commit_log):
@@ -47,6 +44,16 @@ class IdempotentParquetSink:
         with open(tmp, "w") as f:
             json.dump(ids, f)
         os.replace(tmp, self.commit_log)  # atomic on POSIX
+
+
+class IdempotentParquetSink(CommittedBatchLog):
+    """foreachBatch target writing each micro-batch exactly once."""
+
+    def __init__(self, out_dir: str) -> None:
+        self.out_dir = out_dir
+        self.data_dir = os.path.join(out_dir, "data")
+        self.commit_log = os.path.join(out_dir, "_committed_batches.json")
+        os.makedirs(self.data_dir, exist_ok=True)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in self.committed():

@@ -1,4 +1,5 @@
-"""Event-time streaming operators (SURVEY.md §2-B/§2-C streaming block).
+"""Event-time streaming operators (SURVEY.md §2-B/§2-C streaming block)
+and the one lifecycle every query in the package goes through.
 
 The reference declared — but never wired — an event-time pipeline with
 3.5 s bounded out-of-orderness feeding a per-device "presence" sink
@@ -11,19 +12,29 @@ jobs are that intended plan, expressed as Structured Streaming:
 - ``sliding_counts``      sliding window aggregation
 - ``session_windows``     session (gap) windows — the "presence" shape
 - ``dedup_stream``        watermark-scoped exact dedup
+- ``dedup_stream_within_watermark``  per-device dedup whose state
+                          expires with the watermark
 - ``presence_transitions``B3: arbitrary per-key state (online/offline)
                           via applyInPandasWithState, RocksDB-ready
-- ``start_stream``        start a writer with at most one state
-                          partition per local core
-- ``run_to_memory``       availableNow → memory-sink test harness
+- ``rate_limit_stream``   keyed throttle: at most N events per device
+                          and event-time window, bounded state
 
 Every operator works on both streaming and batch DataFrames (the batch
 twins in plans/events_queries.py are the oracle-checked equivalents).
+
+Lifecycle (the only code in the package that starts a query or waits
+for one; tests/test_streaming_lifecycle.py pins that):
+
+- ``start_stream``        Spark 4.1 confs off, state partitions capped
+                          at the local cores (and ``max_partitions``)
+- ``run_bounded``         availableNow run with one bounded wait:
+                          raises on failure or timeout, never leaves a
+                          partial sink behind
+- ``run_to_memory``       ``run_bounded`` into a memory sink, read back
 """
 
 from __future__ import annotations
 
-import time
 import uuid
 from collections.abc import Iterator
 from typing import Any
@@ -34,6 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from weather_flink_spark.session import STREAMING_CONFS
 
 OUT_OF_ORDER = "3.5 seconds"  # WeatherProcessingJob.java:66 (3.5f * 1000 ms)
 
@@ -92,6 +105,15 @@ def session_windows(df: DataFrame, gap: str = "30 seconds") -> DataFrame:
 def dedup_stream(df: DataFrame) -> DataFrame:
     """Exact dedup on (deviceId, event_time) scoped by the watermark."""
     return df.dropDuplicates(["deviceId", "event_time"])
+
+
+def dedup_stream_within_watermark(df: DataFrame) -> DataFrame:
+    """Spark 3.5+ ``dropDuplicatesWithinWatermark``: dedups per deviceId
+    when duplicates land within the watermark delay of each other, and
+    expires the dedup state by watermark — bounded state even when the
+    same key recurs forever, the contract dropDuplicates (state never
+    expires for keys without event-time columns) cannot give."""
+    return df.dropDuplicatesWithinWatermark(["deviceId"])
 
 
 # ---------------------------------------------------------------------------
@@ -275,50 +297,78 @@ def rate_limit_stream(
 
 
 # ---------------------------------------------------------------------------
-# starting a query; test harness: run to a memory sink and read it back
+# query lifecycle: the one place a query starts or is waited on
 # ---------------------------------------------------------------------------
 
 
-def start_stream(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
-    """Start ``writer`` with at most one state partition per local core.
+def start_stream(
+    spark: SparkSession, writer: DataStreamWriter, max_partitions: int | None = None
+) -> StreamingQuery:
+    """Start ``writer`` with ``session.STREAMING_CONFS`` set and its
+    state partitions capped.
 
     Each stateful operator keeps one state-store partition per shuffle
     partition. The count is fixed when the checkpoint is created and
     AQE never coalesces it, so the session's batch-sized
     ``spark.sql.shuffle.partitions`` would become that many Python
     state tasks per micro-batch, nearly all of it per-task overhead.
-    On a ``local[...]`` master the conf is lowered to
-    ``min(current, defaultParallelism)`` for the ``start()`` call only:
-    the query clones the session conf while ``start()`` builds it, so
-    restoring the session value afterwards is safe. A resumed
-    checkpoint keeps its own count (Spark restores it from the offset
-    log). Any other master starts plainly: executors may not have
-    registered yet, and the count would stay fixed for the
-    checkpoint's life.
+    On a ``local[...]`` master the count is lowered to at most
+    ``defaultParallelism``; on any master ``max_partitions`` lowers it
+    further (tiny fixtures). Any other master gets no core cap:
+    executors may not have registered yet, and the count would stay
+    fixed for the checkpoint's life. The count is set for the
+    ``start()`` call only: the query clones the session conf while
+    ``start()`` builds it, so restoring the session value afterwards is
+    safe. A resumed checkpoint keeps its own count (Spark restores it
+    from the offset log).
     """
-    sc = spark.sparkContext
-    if not (sc.master == "local" or sc.master.startswith("local[")):
-        return writer.start()
+    for k, v in STREAMING_CONFS.items():
+        spark.conf.set(k, v)
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    spark.conf.set(key, str(min(int(before), sc.defaultParallelism)))
+    n = int(before)
+    sc = spark.sparkContext
+    if sc.master == "local" or sc.master.startswith("local["):
+        n = min(n, sc.defaultParallelism)
+    if max_partitions is not None:
+        n = min(n, max_partitions)
+    spark.conf.set(key, str(n))
     try:
         return writer.start()
     finally:
         spark.conf.set(key, before)
 
 
+def run_bounded(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    timeout_s: float = 120.0,
+    max_partitions: int | None = None,
+) -> StreamingQuery:
+    """Run ``writer`` over what its source holds now, then return.
+
+    availableNow processes everything the source currently has and
+    stops, the deterministic way to run unbounded plans on bounded
+    fixtures. A failed query raises from ``awaitTermination``; one
+    still running after ``timeout_s`` is stopped and raises
+    ``TimeoutError``, so no caller ever reads a partial sink. Returns
+    the finished query (``recentProgress`` stays readable).
+    """
+    q = start_stream(spark, writer.trigger(availableNow=True), max_partitions)
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"streaming query {q.name or q.id} still active after {timeout_s} s")
+    return q
+
+
 def run_to_memory(
     result: DataFrame,
     output_mode: str = "append",
-    timeout_s: float = 120.0,
     progress_sink: list | None = None,
+    max_partitions: int | None = None,
 ) -> DataFrame:
-    """Execute a streaming DataFrame with availableNow into a memory sink.
-
-    Returns the sink contents as a batch DataFrame. availableNow
-    processes everything the source currently has, then stops — the
-    deterministic way to test unbounded plans on bounded fixtures.
+    """``run_bounded`` into a memory sink; returns its contents as a
+    batch DataFrame.
 
     ``progress_sink``: when given, the query's per-micro-batch progress
     dicts (recentProgress) are appended to it before return — the
@@ -327,137 +377,12 @@ def run_to_memory(
     """
     name = f"mem_{uuid.uuid4().hex[:12]}"
     spark = result.sparkSession
-    q = start_stream(
+    q = run_bounded(
         spark,
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True),
+        result.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        max_partitions=max_partitions,
     )
-    deadline = time.time() + timeout_s
-    while q.isActive and time.time() < deadline:
-        # 20 ms poll: availableNow fixtures finish in ~1 s, and the poll
-        # quantum is pure dead time at the end of every entry (1 s -> 50
-        # ms in round 3 cut ~12 s; 50 -> 20 ms trims the rest of the
-        # tail without busy-waiting)
-        q.awaitTermination(0.02)
-    if q.isActive:  # pragma: no cover
-        q.stop()
-        raise TimeoutError("streaming query did not finish in time")
     if progress_sink is not None:
         progress_sink.extend(q.recentProgress)
     return spark.table(name)
 
-
-# ---------------------------------------------------------------------------
-# B3 via Spark 4's transformWithStateInPandas (the successor API)
-# ---------------------------------------------------------------------------
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas spawns a protobuf-speaking driver
-    worker; without a working google.protobuf it crashes at init."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def presence_transitions_tws(df: DataFrame, gap_ms: int = 30_000) -> DataFrame:
-    """Presence transitions on the Spark 4 ``transformWithStateInPandas``
-    API: typed value state + event-time timers instead of the single
-    opaque state tuple of ``applyInPandasWithState``. Same output
-    contract as ``presence_transitions``; the timer fires the offline
-    event when the watermark passes last_seen + gap.
-
-    Environment gate: the TWS driver worker requires ``google.protobuf``,
-    which this container lacks — the plan builds everywhere, execution
-    needs protobuf (tests skip via ``tws_available()``).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class PresenceProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState("presence", _PRESENCE_STATE)
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):
-            device = key[0]
-            ts: list[int] = []
-            for pdf in rows:
-                ts.extend(int(t) for t in pdf["timestamp"])
-            ts.sort()
-            last_seen, n_events = (
-                self.state.get() if self.state.exists() else (None, 0)
-            )
-            out: list[dict[str, Any]] = []
-            for t in ts:
-                if last_seen is None or t - last_seen > gap_ms:
-                    if last_seen is not None:
-                        out.append(
-                            {
-                                "deviceId": device,
-                                "transition": "offline",
-                                "at": last_seen + gap_ms,
-                                "n_events_in_session": n_events,
-                            }
-                        )
-                    out.append(
-                        {
-                            "deviceId": device,
-                            "transition": "online",
-                            "at": t,
-                            "n_events_in_session": 0,
-                        }
-                    )
-                    n_events = 0
-                n_events += 1
-                last_seen = t
-            self.state.update((last_seen, n_events))
-            wm = timerValues.getCurrentWatermarkInMs()
-            self.handle.registerTimer(max(last_seen + gap_ms, wm + 1))
-            yield pd.DataFrame(out, columns=[f.name for f in PRESENCE_OUTPUT.fields])
-
-        def handleExpiredTimer(self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo):
-            if self.state.exists():
-                last_seen, n_events = self.state.get()
-                self.state.clear()
-                yield pd.DataFrame(
-                    [
-                        {
-                            "deviceId": key[0],
-                            "transition": "offline",
-                            "at": last_seen + gap_ms,
-                            "n_events_in_session": n_events,
-                        }
-                    ],
-                    columns=[f.name for f in PRESENCE_OUTPUT.fields],
-                )
-            else:  # pragma: no cover
-                yield pd.DataFrame(columns=[f.name for f in PRESENCE_OUTPUT.fields])
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy("deviceId").transformWithStateInPandas(
-        PresenceProcessor(),
-        outputStructType=PRESENCE_OUTPUT,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
-def dedup_stream_within_watermark(df: DataFrame) -> DataFrame:
-    """Spark 3.5+ ``dropDuplicatesWithinWatermark``: dedups per deviceId
-    when duplicates land within the watermark delay of each other, and
-    expires the dedup state by watermark — bounded state even when the
-    same key recurs forever, the contract dropDuplicates (state never
-    expires for keys without event-time columns) cannot give."""
-    return df.dropDuplicatesWithinWatermark(["deviceId"])

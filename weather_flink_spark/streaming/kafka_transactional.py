@@ -46,6 +46,8 @@ from typing import Callable, Iterable, Protocol
 
 from pyspark.sql import DataFrame
 
+from weather_flink_spark.streaming.exactly_once import CommittedBatchLog
+
 TRANSACTIONAL_ID_PREFIX = "weather-presence"  # WeatherProcessingJob.java:97
 
 
@@ -151,11 +153,13 @@ def sorted_repr_kv(row) -> tuple[bytes, bytes]:
     return key, repr(sorted(d.items())).encode()
 
 
-class TransactionalKafkaSink:
+class TransactionalKafkaSink(CommittedBatchLog):
     """``foreachBatch`` target: exactly-once Kafka emission.
 
     ``row_to_kv`` maps a Row to ``(key_bytes_or_None, value_bytes)`` —
-    executor-side, so it must be picklable (top-level function).
+    executor-side, so it must be picklable (top-level function). The
+    committed-batch log under ``commit_dir`` stands in for the marker
+    topic.
     """
 
     def __init__(
@@ -173,20 +177,6 @@ class TransactionalKafkaSink:
         self.txn_prefix = txn_prefix
         self.commit_log = os.path.join(commit_dir, "_committed_batches.json")
         os.makedirs(commit_dir, exist_ok=True)
-
-    # -- the committed-batch marker log (stand-in for the marker topic) --
-    def committed(self) -> set[int]:
-        if not os.path.exists(self.commit_log):
-            return set()
-        with open(self.commit_log) as f:
-            return set(json.load(f))
-
-    def _commit(self, batch_id: int) -> None:
-        ids = sorted(self.committed() | {batch_id})
-        tmp = self.commit_log + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ids, f)
-        os.replace(tmp, self.commit_log)  # atomic on POSIX
 
     # -- the foreachBatch entry point --
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
